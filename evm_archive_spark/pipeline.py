@@ -23,16 +23,34 @@ Spark-side additions:
 - ``EVM_ARCHIVE_STREAM``         "1" → tail-follow via Structured Streaming
   with a processingTime trigger of SLEEP_SECONDS (A13); default bounded
   batch backfill (availableNow semantics)
+- ``EVM_ARCHIVE_ENRICH_TIMESTAMPS`` "1" → fill ``block_timestamp``: the
+  ``evm_logs`` reader (option ``enrichTimestamps``) fetches one header per
+  block that has logs, in the same task as the window's ``eth_getLogs``
+- ``EVM_ARCHIVE_MAX_BLOCKS_PER_BATCH`` streaming admission cap in blocks
+  per micro-batch (reader option ``maxBlocksPerBatch``); default -1, <= 0
+  leaves batches uncapped
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 from .schemas import LOGS_PK, PRICE_PK
 from .sources import rpc
+
+log = logging.getLogger(__name__)
+
+# Stored logs are unique on PK + removed, not the PK alone: a reorg
+# re-delivers a log's PK with removed=true in the same or a later poll
+# window, and the tombstone must be STORED verbatim (reference
+# get_logs.go:52 stores removed as a column) -- a PK-only dedup would
+# arbitrarily drop either the row or its tombstone.  Resolution is a
+# read-time concern (reorg.resolve_removed via read_sink), keeping the
+# sink append-only and idempotent.
+LOGS_SINK_KEY = LOGS_PK + ["removed"]
 
 
 def env_config(env: dict | None = None) -> dict:
@@ -80,6 +98,17 @@ def _write_idempotent(df, path: str, batch_key: int) -> None:
     )
 
 
+def _drop_if_empty_dir(path: str) -> bool:
+    """Undo the one trace an empty write leaves: the sink directory it
+    creates when none existed, from which ``spark.read.parquet`` cannot
+    infer a schema.  A directory holding anything is left alone.  True
+    when a directory was removed, i.e. the sink holds no rows."""
+    if os.path.isdir(path) and not os.listdir(path):
+        os.rmdir(path)
+        return True
+    return False
+
+
 def read_sink(
     spark: SparkSession,
     path: str,
@@ -109,7 +138,11 @@ def read_sink(
 
 def _resume_from(spark: SparkSession, path: str, from_block: int) -> int:
     """A10/A11: start = max(sink max + 1, FROM_BLOCK) (main.go:162-175,
-    206-215) — reconciliation against the parquet sink."""
+    206-215) — reconciliation against the parquet sink.  Only a sink that
+    does not exist yet reads as empty; any other read error (a corrupt
+    file, an unreadable directory) raises rather than re-archiving from
+    FROM_BLOCK."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     try:
@@ -118,21 +151,17 @@ def _resume_from(spark: SparkSession, path: str, from_block: int) -> int:
             .agg(F.max("block_number").alias("m"))
             .collect()[0]["m"]
         )
-    except Exception:  # noqa: BLE001 — empty/missing sink == block 0
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         mx = None
     return max((mx + 1) if mx is not None else 0, from_block)
 
 
-def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
-    """Bounded backfill: logs + price + (optional) header enrichment into
-    partitioned parquet.  Returns row counts per table."""
-    cfg = cfg or env_config()
-    rpc.register(spark)
-    logs_path = os.path.join(cfg["out"], "logs")
-    start = _resume_from(spark, logs_path, cfg["from_block"])
-
+def _logs_reader(reader, cfg: dict, start: int):
+    """The ``evm_logs`` options run_batch and run_stream share."""
     reader = (
-        spark.read.format("evm_logs")
+        reader.format("evm_logs")
         .option("endpoint", cfg["endpoint"])
         .option("fromBlock", str(start))
         .option("blockStep", str(cfg["block_step"]))
@@ -141,21 +170,25 @@ def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
         reader = reader.option("toBlock", str(cfg["to_block"]))
     if cfg["contracts"]:
         reader = reader.option("contracts", cfg["contracts"])
-    logs = reader.load().dropDuplicates(LOGS_PK)
-
     if cfg["enrich"]:
-        blocks_reader = (
-            spark.read.format("evm_blocks")
-            .option("endpoint", cfg["endpoint"])
-            .option("fromBlock", str(start))
-            .option("blockStep", str(cfg["block_step"]))
-        )
-        if cfg["to_block"] >= 0:
-            blocks_reader = blocks_reader.option("toBlock", str(cfg["to_block"]))
-        logs = rpc.enrich_block_timestamps(logs, blocks_reader.load())
+        reader = reader.option("enrichTimestamps", "true")
+    return reader
 
+
+def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
+    """Bounded backfill: logs (timestamps filled by the reader when
+    enrichment is on) + price into partitioned parquet.  Returns row
+    counts per table."""
+    cfg = cfg or env_config()
+    rpc.register(spark)
+    logs_path = os.path.join(cfg["out"], "logs")
+    start = _resume_from(spark, logs_path, cfg["from_block"])
+    logs = _logs_reader(spark.read, cfg, start).load().dropDuplicates(
+        LOGS_SINK_KEY
+    )
     _write_idempotent(logs, logs_path, start)
-    counts = {"logs": read_sink(spark, logs_path).count()}
+    empty = _drop_if_empty_dir(logs_path)
+    counts = {"logs": 0 if empty else read_sink(spark, logs_path).count()}
 
     if cfg["tokens"] and cfg["oracles"]:
         price_path = os.path.join(cfg["out"], "price")
@@ -189,6 +222,7 @@ def _stream_batch_writer(
     is called with topic 'logs' / 'price' after the corresponding sink
     commit — the engine-side analogue of the reference's insert trigger
     firing Postgres NOTIFY for Postgraphile --simple-subscriptions."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     want_price = bool(cfg["tokens"] and cfg["oracles"])
@@ -198,33 +232,27 @@ def _stream_batch_writer(
             try:
                 publish(topic)
             except Exception:  # noqa: BLE001 — listeners never fail ingest
-                pass
+                log.warning("publish(%r) failed", topic, exc_info=True)
 
     def write_batch(batch_df, batch_id: int) -> None:
-        # dedup on PK + removed, NOT the PK alone: a reorg re-delivers a
-        # log's PK with removed=true in the same or a later poll window,
-        # and the tombstone must be STORED verbatim (reference
-        # get_logs.go:52 stores removed as a column) — a PK-only dedup
-        # would arbitrarily drop either the row or its tombstone.
-        # Resolution is a read-time concern (reorg.resolve_removed via
-        # read_sink), keeping the sink append-only and idempotent.
-        batch_df = batch_df.dropDuplicates(LOGS_PK + ["removed"])
-        bounds = batch_df.agg(
-            F.min("block_number").alias("lo"), F.max("block_number").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is None:
+        # The block bounds the price probes need are observed during the
+        # logs write: foreachBatch re-plans the DataSource scan for every
+        # action, so a separate bounds query would read the node twice
+        # and could see another snapshot of it.
+        bounds = Observation()
+        _write_idempotent(
+            batch_df.dropDuplicates(LOGS_SINK_KEY).observe(
+                bounds,
+                F.min("block_number").alias("lo"),
+                F.max("block_number").alias("hi"),
+            ),
+            logs_path,
+            batch_id,
+        )
+        lo, hi = bounds.get["lo"], bounds.get["hi"]
+        if lo is None:
+            _drop_if_empty_dir(logs_path)
             return
-        if cfg["enrich"]:
-            headers = (
-                batch_df.sparkSession.read.format("evm_blocks")
-                .option("endpoint", cfg["endpoint"])
-                .option("fromBlock", str(bounds["lo"]))
-                .option("toBlock", str(bounds["hi"]))
-                .option("blockStep", str(cfg["block_step"]))
-                .load()
-            )
-            batch_df = rpc.enrich_block_timestamps(batch_df, headers)
-        _write_idempotent(batch_df, logs_path, batch_id)
         _notify("logs")
         if not want_price:
             return
@@ -233,8 +261,8 @@ def _stream_batch_writer(
             .option("endpoint", cfg["endpoint"])
             .option("tokens", cfg["tokens"])
             .option("oracles", cfg["oracles"])
-            .option("fromBlock", str(bounds["lo"]))
-            .option("toBlock", str(bounds["hi"]))
+            .option("fromBlock", str(lo))
+            .option("toBlock", str(hi))
             .option("blockStep", str(cfg["block_step"]))
             .load()
             .dropDuplicates(PRICE_PK)
@@ -261,16 +289,7 @@ def run_stream(
     logs_path = os.path.join(cfg["out"], "logs")
     price_path = os.path.join(cfg["out"], "price")
     start = _resume_from(spark, logs_path, cfg["from_block"])
-    reader = (
-        spark.readStream.format("evm_logs")
-        .option("endpoint", cfg["endpoint"])
-        .option("fromBlock", str(start))
-        .option("blockStep", str(cfg["block_step"]))
-    )
-    if cfg["to_block"] >= 0:
-        reader = reader.option("toBlock", str(cfg["to_block"]))
-    if cfg["contracts"]:
-        reader = reader.option("contracts", cfg["contracts"])
+    reader = _logs_reader(spark.readStream, cfg, start)
     if cfg.get("max_blocks_per_batch", -1) > 0:
         reader = reader.option(
             "maxBlocksPerBatch", str(cfg["max_blocks_per_batch"])

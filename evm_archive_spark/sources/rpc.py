@@ -230,8 +230,11 @@ def plan_ranges(start: int, end: int, step: int) -> list[BlockRange]:
     ]
 
 
-def _wire_to_row(log: dict) -> tuple:
-    """A5-A7 applied in the reader (same semantics as transform.py)."""
+def _wire_to_row(log: dict, timestamps: dict | None = None) -> tuple:
+    """A5-A7 applied in the reader (same semantics as transform.py);
+    ``block_timestamp`` from ``timestamps`` (block number -> datetime)
+    when given, else None as in the reference."""
+    block = _from_hex(log["blockNumber"])
     topics = log.get("topics") or []
     t = [topics[i] if i < len(topics) else "" for i in range(4)]
     data = log.get("data")
@@ -245,17 +248,49 @@ def _wire_to_row(log: dict) -> tuple:
         t[3],
         data,
         log.get("blockHash"),
-        _from_hex(log["blockNumber"]),
+        block,
         log.get("transactionHash"),
         _from_hex(log.get("transactionIndex", "0x0")),
         _from_hex(log.get("logIndex", "0x0")),
         bool(log.get("removed", False)),
-        None,
+        timestamps.get(block) if timestamps else None,
     )
 
 
-def _fetch_range(transport, rng: BlockRange, contracts: list[str] | None):
-    """A1: one eth_getLogs call per sub-range; SkipWindow -> empty."""
+def _header_timestamp(hdr: dict):
+    """A header's ``timestamp`` as a naive UTC datetime (LOGS/BLOCKS
+    schemas store ``block_timestamp`` without a zone)."""
+    import datetime as dt
+
+    return dt.datetime.fromtimestamp(
+        _from_hex(hdr["timestamp"]), dt.timezone.utc
+    ).replace(tzinfo=None)
+
+
+def _block_timestamps(transport, blocks) -> dict:
+    """One ``eth_getBlockByNumber`` per block; a null header or a poison
+    answer leaves that block's timestamp None."""
+    out = {}
+    for block in blocks:
+        try:
+            hdr = transport.call("eth_getBlockByNumber", [_hex(block), False])
+        except SkipWindow:
+            hdr = None
+        out[block] = _header_timestamp(hdr) if hdr else None
+    return out
+
+
+def _fetch_range(
+    transport,
+    rng: BlockRange,
+    contracts: list[str] | None,
+    enrich_timestamps: bool = False,
+):
+    """A1: one eth_getLogs call per sub-range; SkipWindow -> empty.
+
+    With ``enrich_timestamps`` the window's answer also gets one header
+    per distinct ``blockNumber`` in it (a tombstone counts under its
+    original block), so blocks without logs cost no request."""
     query = {"fromBlock": _hex(rng.start), "toBlock": _hex(rng.end)}
     if contracts:
         query["address"] = contracts
@@ -263,8 +298,12 @@ def _fetch_range(transport, rng: BlockRange, contracts: list[str] | None):
         logs = transport.call("eth_getLogs", [query])
     except SkipWindow:
         return
+    timestamps = None
+    if enrich_timestamps:
+        blocks = sorted({_from_hex(log["blockNumber"]) for log in logs})
+        timestamps = _block_timestamps(transport, blocks)
     for log in logs:
-        yield _wire_to_row(log)
+        yield _wire_to_row(log, timestamps)
 
 
 # Arrow-side mirrors of LOGS_SCHEMA / BLOCKS_SCHEMA.  The Python DataSource
@@ -345,6 +384,8 @@ def _opts(options) -> dict:
         "max_blocks_per_batch": int(options.get("maxblocksperbatch", "0")),
         "retry_seconds": float(options.get("retryseconds", "10")),
         "max_retries": int(options.get("maxretries", "30")),
+        "enrich_timestamps": (options.get("enrichtimestamps") or "false").lower()
+        == "true",
     }
 
 
@@ -373,7 +414,8 @@ class EvmLogsBatchReader(DataSourceReader):
         o = self.o
         t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
         yield from _rows_to_batches(
-            _fetch_range(t, partition, o["contracts"]), _arrow_logs_schema()
+            _fetch_range(t, partition, o["contracts"], o["enrich_timestamps"]),
+            _arrow_logs_schema(),
         )
 
 
@@ -428,7 +470,8 @@ class EvmLogsStreamReader(DataSourceStreamReader):
         o = self.o
         t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
         yield from _rows_to_batches(
-            _fetch_range(t, partition, o["contracts"]), _arrow_logs_schema()
+            _fetch_range(t, partition, o["contracts"], o["enrich_timestamps"]),
+            _arrow_logs_schema(),
         )
 
     def commit(self, end: dict) -> None:
@@ -440,7 +483,11 @@ class EvmLogsDataSource(DataSource):
 
     Options: endpoint, contracts (CSV), fromBlock, toBlock, blockStep,
     maxBlocksPerBatch, retrySeconds, maxRetries — the reference's env
-    surface (A14, main.go:18-91) as reader options."""
+    surface (A14, main.go:18-91) as reader options — plus
+    enrichTimestamps ("true"): fill ``block_timestamp`` from one
+    ``eth_getBlockByNumber`` per block that has logs in a window, fetched
+    in the same task as the window's ``eth_getLogs`` (a null header
+    leaves it null)."""
 
     @classmethod
     def name(cls):
@@ -547,8 +594,6 @@ class EvmBlocksBatchReader(DataSourceReader):
         )
 
     def _headers(self, t, partition: BlockRange):
-        import datetime as dt
-
         for block in range(partition.start, partition.end + 1):
             try:
                 hdr = t.call("eth_getBlockByNumber", [_hex(block), False])
@@ -556,13 +601,7 @@ class EvmBlocksBatchReader(DataSourceReader):
                 continue
             if not hdr:
                 continue
-            yield (
-                _from_hex(hdr["number"]),
-                hdr.get("hash"),
-                dt.datetime.fromtimestamp(
-                    _from_hex(hdr["timestamp"]), dt.timezone.utc
-                ).replace(tzinfo=None),
-            )
+            yield (_from_hex(hdr["number"]), hdr.get("hash"), _header_timestamp(hdr))
 
 
 class EvmBlocksDataSource(DataSource):

@@ -16,8 +16,18 @@ def main() -> None:
     sf_dir, names = sys.argv[1], sys.argv[2:]
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as E
+    import bench
     from evm_archive_spark.session import get_spark
     from evm_archive_spark.tables import register_testdata
+
+    queries = E.queries()
+    unknown = [
+        n for n in names
+        if n not in queries and not callable(getattr(bench, n.removeprefix("q_"), None))
+    ]
+    if unknown:
+        # before the Spark warm-up, which costs tens of seconds
+        sys.exit(f"cold_lane: unknown lane(s): {', '.join(unknown)}")
 
     spark = get_spark("cold-lane")
     spark.sparkContext.setLogLevel("ERROR")
@@ -25,9 +35,7 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id) s").collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     register_testdata(spark, sf_dir)
-    import bench
 
-    queries = E.queries()
     out = {}
     for name in names:
         t0 = time.perf_counter()

@@ -3,6 +3,8 @@ same env surface as the reference (main.go:18-91), idempotent re-run."""
 
 from __future__ import annotations
 
+import pytest
+
 from evm_archive_spark.pipeline import env_config, run_batch
 
 
@@ -194,3 +196,127 @@ def test_stream_reorg_tombstone_reverts_prior_row(spark, tmp_path):
     raw2 = spark.read.parquet(logs_path)
     assert raw2.count() == raw.count()
     assert read_sink(spark, logs_path, LOGS_PK).count() == 19 * 2
+
+
+def test_batch_stores_tombstone_beside_its_row(spark, tmp_path):
+    """run_batch dedups on PK + removed like the stream writer: a
+    tombstone delivered in the same run as its row is stored beside it,
+    so the resolved view drops the reorged block."""
+    from evm_archive_spark.pipeline import read_sink
+    from evm_archive_spark.schemas import LOGS_PK
+
+    cfg = _cfg(
+        tmp_path,
+        EVM_ARCHIVE_ENDPOINT=(
+            "mock://head=19,logs_per_block=2,reorg_block=5,reorg_seen_from=10"
+        ),
+        EVM_ARCHIVE_BLOCK_STEP="20",
+        EVM_ARCHIVE_TOKENS="",
+        EVM_ARCHIVE_ORACLES="",
+    )
+    run_batch(spark, cfg)
+    logs_path = str(tmp_path / "out" / "logs")
+    view = read_sink(spark, logs_path, LOGS_PK)
+    assert view.filter("block_number = 5").count() == 0
+    assert view.count() == 19 * 2
+    raw = spark.read.parquet(logs_path).filter("block_number = 5")
+    assert raw.count() == 4  # both rows and both tombstones
+    assert raw.filter("removed").count() == 2
+
+
+def test_empty_micro_batch_leaves_sink_untouched(spark, tmp_path):
+    """A micro-batch without rows creates no directory, publishes nothing
+    and writes no price rows; the sink stays readable and the resume
+    cursor unchanged."""
+    from evm_archive_spark.pipeline import _resume_from, _stream_batch_writer, read_sink
+    from evm_archive_spark.sources import rpc
+
+    cfg = _cfg(tmp_path)
+    rpc.register(spark)
+
+    def batch(contracts: str | None):
+        r = (
+            spark.read.format("evm_logs")
+            .option("endpoint", cfg["endpoint"])
+            .option("fromBlock", "0")
+            .option("toBlock", "9")
+            .option("blockStep", "5")
+        )
+        return (r.option("contracts", contracts) if contracts else r).load()
+
+    out = tmp_path / "out"
+    logs_path, price_path = str(out / "logs"), str(out / "price")
+    published = []
+    write_batch = _stream_batch_writer(cfg, logs_path, price_path, published.append)
+    empty = batch("0x" + "0" * 40)  # matches no mock address
+
+    write_batch(empty, 0)
+    assert not (out / "logs").exists() and not (out / "price").exists()
+    assert published == []
+    assert _resume_from(spark, logs_path, 0) == 0
+
+    write_batch(batch(None), 1)
+    write_batch(empty, 2)
+    assert published == ["logs", "price"]
+    assert sorted(p.name for p in (out / "logs").glob("ingest_batch=*")) == [
+        "ingest_batch=1"
+    ]
+    assert sorted(p.name for p in (out / "price").glob("ingest_batch=*")) == [
+        "ingest_batch=1"
+    ]
+    assert read_sink(spark, logs_path).count() == 20
+    assert _resume_from(spark, logs_path, 0) == 10
+
+
+def test_batch_without_logs_leaves_no_sink(spark, tmp_path):
+    """A backfill whose range holds no logs reports 0 and leaves no empty
+    logs directory behind, so the next run resumes from FROM_BLOCK."""
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_CONTRACTS="0x" + "0" * 40)
+    assert run_batch(spark, cfg) == {"logs": 0, "price": 4}
+    assert not (tmp_path / "out" / "logs").exists()
+    assert run_batch(spark, cfg)["logs"] == 0
+
+
+def test_failed_publish_is_logged(spark, tmp_path, caplog):
+    from evm_archive_spark.pipeline import _stream_batch_writer
+    from evm_archive_spark.sources import rpc
+
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_TOKENS="", EVM_ARCHIVE_ORACLES="")
+    rpc.register(spark)
+    batch = (
+        spark.read.format("evm_logs")
+        .option("endpoint", cfg["endpoint"])
+        .option("fromBlock", "0")
+        .option("toBlock", "4")
+        .load()
+    )
+
+    def publish(topic):
+        raise RuntimeError("listener down")
+
+    out = tmp_path / "out"
+    write_batch = _stream_batch_writer(
+        cfg, str(out / "logs"), str(out / "price"), publish
+    )
+    with caplog.at_level("WARNING", logger="evm_archive_spark.pipeline"):
+        write_batch(batch, 0)  # ingest goes on
+    assert (out / "logs" / "ingest_batch=0").is_dir()
+    [rec] = [r for r in caplog.records if r.name == "evm_archive_spark.pipeline"]
+    assert rec.levelname == "WARNING" and "logs" in rec.getMessage()
+    assert "listener down" in str(rec.exc_info[1])
+
+
+def test_corrupt_sink_raises_instead_of_rearchiving(spark, tmp_path):
+    """Only a missing sink reads as empty: a sink whose parquet files are
+    corrupt makes run_batch raise instead of starting again from
+    FROM_BLOCK."""
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="4", EVM_ARCHIVE_TOKENS="",
+               EVM_ARCHIVE_ORACLES="")
+    run_batch(spark, cfg)
+    files = list((tmp_path / "out" / "logs").rglob("*.parquet"))
+    assert files
+    for f in files:
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        run_batch(spark, cfg)
+    assert "PATH_NOT_FOUND" not in str(err.value)

@@ -181,27 +181,35 @@ def test_retry_classification():
         t.call("eth_unknownMethod", [])
 
 
-def _start_scripted_server(fail_first: int):
+def _start_scripted_server(fail_first: int, spec: str = "head=9,logs_per_block=1"):
     """Tiny live JSON-RPC server: first N requests get HTTP 503, then real
-    responses from a MockTransport — exercises HttpTransport's retry path
-    (A4, main.go:119-136) over an actual socket."""
+    responses from a MockTransport(``mock://<spec>``) — exercises
+    HttpTransport's retry path (A4, main.go:119-136) over an actual
+    socket.  ``state["by_method"]`` counts the answered requests per
+    JSON-RPC method."""
+    import collections
     import http.server
     import json as _json
     import threading
 
     from evm_archive_spark.sources.rpc import MockTransport
 
-    mock = MockTransport("mock://head=9,logs_per_block=1")
-    state = {"calls": 0}
+    mock = MockTransport(f"mock://{spec}")
+    state = {"calls": 0, "by_method": collections.Counter()}
+    lock = threading.Lock()
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_POST(self):
-            state["calls"] += 1
-            if state["calls"] <= fail_first:
+            with lock:
+                state["calls"] += 1
+                fail = state["calls"] <= fail_first
+            if fail:
                 self.send_response(503)
                 self.end_headers()
                 return
             body = _json.loads(self.rfile.read(int(self.headers["Content-Length"])))
+            with lock:
+                state["by_method"][body["method"]] += 1
             result = mock.call(body["method"], body["params"])
             out = _json.dumps({"jsonrpc": "2.0", "id": body["id"], "result": result}).encode()
             self.send_response(200)
@@ -268,3 +276,73 @@ def test_batch_source_over_live_http(registered):
         assert sorted(r["block_number"] for r in rows) == list(range(10))
     finally:
         srv.shutdown()
+
+
+@pytest.mark.parametrize("mode", ["batch", "stream"])
+def test_one_read_per_window_and_one_header_per_block_with_logs(
+    registered, tmp_path, mode
+):
+    """Each window is read from the node once: with timestamp enrichment
+    on, run_batch and run_stream(available_now) send one eth_getLogs per
+    blockStep window and, per window, one eth_getBlockByNumber per
+    distinct block in its answer.  A contracts filter leaves some blocks (and the whole window
+    [15, 19]) without logs; block 5's tombstones, re-delivered in window
+    [10, 14], count under block 5 there."""
+    from evm_archive_spark.pipeline import env_config, run_batch, run_stream
+
+    spec = "head=19,logs_per_block=2,reorg_block=5,reorg_seen_from=12"
+    mock = rpc.MockTransport(f"mock://{spec}")
+    picked = [(1, 0), (5, 0), (5, 1), (7, 1), (13, 0)]
+    contracts = ",".join(mock._log(b, i)["address"] for b, i in picked)
+    # window -> blocks in its answer: [0,4] {1}; [5,9] {5, 7};
+    # [10,14] {13, 5 (tombstones)}; [15,19] none
+    want_headers = 5
+    srv, state = _start_scripted_server(fail_first=0, spec=spec)
+    try:
+        cfg = env_config(
+            {
+                "EVM_ARCHIVE_ENDPOINT": f"http://127.0.0.1:{srv.server_address[1]}",
+                "EVM_ARCHIVE_CONTRACTS": contracts,
+                "EVM_ARCHIVE_FROM_BLOCK": "0",
+                "EVM_ARCHIVE_TO_BLOCK": "19",
+                "EVM_ARCHIVE_BLOCK_STEP": "5",
+                "EVM_ARCHIVE_ENRICH_TIMESTAMPS": "1",
+                "EVM_ARCHIVE_OUT": str(tmp_path / "out"),
+            }
+        )
+        if mode == "batch":
+            run_batch(registered, cfg)
+        else:
+            run_stream(registered, cfg, available_now=True).awaitTermination()
+    finally:
+        srv.shutdown()
+    by_method = state["by_method"]
+    assert by_method["eth_getLogs"] == 4  # windows
+    assert by_method["eth_getBlockByNumber"] == want_headers
+
+    stored = (
+        registered.read.parquet(str(tmp_path / "out" / "logs"))
+        .selectExpr("block_number", "removed", "CAST(block_timestamp AS LONG) AS ts")
+        .collect()
+    )
+    assert len(stored) == 7  # 5 rows + 2 tombstones of block 5
+    assert sum(r["removed"] for r in stored) == 2
+    assert all(r["ts"] == 1_600_000_000 + 12 * r["block_number"] for r in stored)
+
+
+def test_enriched_reader_null_header_leaves_timestamp_null():
+    """A block whose header the node answers with null keeps a null
+    block_timestamp, as the evm_blocks left join did."""
+
+    class NoHeaders(rpc.MockTransport):
+        def call(self, method, params):
+            if method == "eth_getBlockByNumber":
+                return None
+            return super().call(method, params)
+
+    t = NoHeaders("mock://head=9,logs_per_block=1")
+    rows = list(rpc._fetch_range(t, rpc.BlockRange(0, 4), None, True))
+    assert len(rows) == 5 and all(r[-1] is None for r in rows)
+    t = rpc.MockTransport("mock://head=9,logs_per_block=1")
+    rows = list(rpc._fetch_range(t, rpc.BlockRange(0, 4), None, True))
+    assert all(r[-1] is not None for r in rows)
